@@ -17,6 +17,13 @@ Spark-first design decisions:
 - one vectorized UDF emits all L keys as ``array<long>``; ``posexplode``
   yields ``(group_id, key)`` — L rows per record, exactly the reference's
   mapper fan-out (``mr-blocking/HammingLSHBlockingMapper.java:26-37``).
+
+Like that mapper, the key UDF runs ONCE per record. Two rules keep it so:
+a key set with more than one consumer (bucket sizing, both sides of the
+FPS join) is persisted by the pipeline's ``stage(..., reused=True)``, and
+no filter may re-evaluate the UDF — see :func:`blocking_keys` for the
+filter Catalyst would otherwise infer. Batch and streaming keys share
+:func:`blocking_keys`, so both paths get the same plan.
 """
 
 from __future__ import annotations
@@ -80,6 +87,13 @@ def blocking_keys(
     8 bytes of id instead of a ~60-byte string (the surrogate the FPS join
     uses anyway; ``fps.candidate_pairs`` detects the bigint uid and skips
     re-hashing). Shrinks the persisted key set and every downstream shuffle.
+
+    ``posexplode_outer``, not ``posexplode``: for an inner generator
+    Catalyst infers ``size(_keys) > 0 AND isnotnull(_keys)``
+    (InferFiltersFromGenerate) and pushes that filter below the projection,
+    where it would run the key UDF a second time per record (two
+    ``ArrowEvalPython`` nodes). The UDF always returns L >= 1 keys, so the
+    outer form emits the same rows. Works on batch and streaming DataFrames.
     """
     udf = hlsh_keys_udf(positions, n_bits)
     uid_expr = (
@@ -88,5 +102,5 @@ def blocking_keys(
     )
     return (
         df.select(uid_expr, udf(F.col(bf_col)).alias("_keys"))
-        .select("uid", F.posexplode("_keys").alias("group_id", "key"))
+        .select("uid", F.posexplode_outer("_keys").alias("group_id", "key"))
     )

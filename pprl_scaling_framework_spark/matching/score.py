@@ -55,7 +55,12 @@ def score_pairs(
     n_bits: int,
     score_col: str = "sim",
 ) -> DataFrame:
-    udf = similarity_udf(method, n_bits)
+    # asNondeterministic: Catalyst pushes no filter through a projection
+    # holding a nondeterministic expression. With a deterministic UDF,
+    # classify()'s `sim >= t` moves below this withColumn and inlines a
+    # second copy of the UDF (two ArrowEvalPython nodes), so the kernel
+    # would run twice per pair. The kernel itself is deterministic.
+    udf = similarity_udf(method, n_bits).asNondeterministic()
     return pairs_with_bf.withColumn(score_col, udf(F.col("bf_a"), F.col("bf_b")))
 
 

@@ -207,10 +207,11 @@ def salted_pair_candidates(
     salted join resolves to broadcast/hash joins with no exchange on the
     streamed side, the whole quadratic pair fan-out runs in a single task
     (measured: 2.6 s serial of a 4.7 s query). The shuffle moved is the tiny
-    keyed table; the fan-out then parallelizes. Callers whose input is
-    already well-partitioned should leave it None.
+    keyed table; the fan-out then parallelizes. Only widens: an input that
+    already has ``spread`` or more partitions is left as it is, never
+    repartitioned down.
     """
-    if spread is not None:
+    if spread is not None and keyed.rdd.getNumPartitions() < spread:
         keyed = keyed.repartition(spread)
     a, b = salted_sides(
         keyed, keyed, bucket_cols, id_col, hot_threshold, shards, max_bucket,

@@ -187,7 +187,19 @@ def minhash_lsh_pairs(
     shards: int = 16,
 ) -> DataFrame:
     """-> (id_a, id_b, jaccard) for pairs sharing >= 1 LSH band, verified
-    with exact Jaccard over the distinct q-gram sets, jaccard >= threshold."""
+    with exact Jaccard over the distinct q-gram sets, jaccard >= threshold.
+
+    Collision caveat: a band bucket is the 64-bit ``xxhash64(band,
+    band_sig)``, not the band signature itself. Two different band
+    signatures that hash alike share a bucket, which only adds candidate
+    pairs. Every output pair still passes exact verification, but a pair
+    that shares no band yet has Jaccard >= ``threshold`` can then appear,
+    so the output may hold pairs that the collision-free definition (and
+    its DuckDB oracle) would not. A collision into a hot bucket also widens
+    the salted fan-out. With m distinct buckets the chance of any collision
+    is about m^2 / 2^65 (birthday bound): ~3e-8 at 10^6 buckets, ~3e-2 at
+    10^9.
+    """
     rows_per_band = num_hashes // bands
     assert rows_per_band * bands == num_hashes
 

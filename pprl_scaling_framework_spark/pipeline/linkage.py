@@ -147,6 +147,26 @@ def expand_matched_pairs(
     )
 
 
+def _stager(runner: StageRunner | None, tracked: list):
+    """-> ``stage(name, build, reused=False)``: build one pipeline stage.
+
+    With a ``runner`` every stage is materialized by it. Without one nothing
+    is, and the rule that keeps every Python UDF at one evaluation per row
+    applies: a stage with more than one consumer is persisted
+    (``reused=True``, registered in ``tracked`` for
+    ``LinkageResult.release``), or its UDF re-runs once per consumer; and
+    no filter may re-evaluate a UDF (see ``hlsh.blocking_keys`` and
+    ``matching.score.score_pairs``). ``tests/test_udf_plans.py`` checks it.
+    """
+    def stage(name, build, reused: bool = False):
+        if runner is not None:
+            return runner.run(name, build)
+        df = build()
+        return track_persist(df, tracked) if reused else df
+
+    return stage
+
+
 def run_dedup_pipeline(
     spark: SparkSession,
     records: DataFrame,
@@ -168,15 +188,7 @@ def run_dedup_pipeline(
     n_bits = config.encoding.total_bits
     pos = hlsh.position_matrix(plan.L, config.hlsh_K, n_bits, config.hlsh_seed)
     tracked: list = []
-
-    def stage(name, build, reused: bool = False):
-        # without a StageRunner nothing is materialized — persist DFs that
-        # multiple downstream branches consume, or the encode UDF re-runs
-        # once per branch (plan audit showed 40 ArrowEvalPython nodes)
-        if runner is not None:
-            return runner.run(name, build)
-        df = build()
-        return track_persist(df, tracked) if reused else df
+    stage = _stager(runner, tracked)
 
     uid_to_rep = None
     if collapse_exact:
@@ -190,8 +202,9 @@ def run_dedup_pipeline(
     # hash_uid: the exploded key set carries the 8-byte xxhash64 surrogate
     # instead of the uid string; key_bits/n_groups pack (group_id, key) into
     # one long downstream — both shrink every candidates-stage shuffle row
+    # reused: bucket sizing and both sides of the FPS self-join read it
     keys = stage("block", lambda: hlsh.blocking_keys(
-        encoded, uid_col, "bf", pos, n_bits, hash_uid=True))
+        encoded, uid_col, "bf", pos, n_bits, hash_uid=True), reused=True)
     cands = stage("candidates", lambda: fps.candidate_pairs(
         keys, None, C=plan.C, hot_threshold=config.hot_threshold,
         shards=config.salt_shards, self_join=True,
@@ -231,21 +244,17 @@ def run_linkage_pipeline(
     n_bits = config_a.encoding.total_bits
     pos = hlsh.position_matrix(plan.L, config_a.hlsh_K, n_bits, config_a.hlsh_seed)
     tracked: list = []
-
-    def stage(name, build, reused: bool = False):
-        if runner is not None:
-            return runner.run(name, build)
-        df = build()
-        return track_persist(df, tracked) if reused else df
+    stage = _stager(runner, tracked)
 
     enc_a = stage("encode_a", lambda: encode_dataframe(
         records_a, config_a.encoding, included=[uid_col]), reused=True)
     enc_b = stage("encode_b", lambda: encode_dataframe(
         records_b, enc_cfg_b, included=[uid_col]), reused=True)
+    # reused: the union bucket sizing and one FPS join side read each
     keys_a = stage("block_a", lambda: hlsh.blocking_keys(
-        enc_a, uid_col, "bf", pos, n_bits, hash_uid=True))
+        enc_a, uid_col, "bf", pos, n_bits, hash_uid=True), reused=True)
     keys_b = stage("block_b", lambda: hlsh.blocking_keys(
-        enc_b, uid_col, "bf", pos, n_bits, hash_uid=True))
+        enc_b, uid_col, "bf", pos, n_bits, hash_uid=True), reused=True)
     cands = stage("candidates", lambda: fps.candidate_pairs(
         keys_a, keys_b, C=plan.C, hot_threshold=config_a.hot_threshold,
         shards=config_a.salt_shards, max_bucket=config_a.max_bucket,

@@ -33,7 +33,8 @@ def encode_stream(
 def blocking_keys_stream(
     encoded_stream: DataFrame, positions, n_bits: int, hash_uid: bool = False
 ) -> DataFrame:
-    """Streaming HLSH keys: posexplode of the key-array UDF.
+    """Streaming HLSH keys: delegates to the batch ``hlsh.blocking_keys``,
+    so both paths share one plan shape and cannot drift apart.
 
     ``hash_uid``: same 8-byte xxhash64 surrogate as the batch path
     (``blocking.hlsh.blocking_keys``), applied BEFORE the L-way explode. At
@@ -44,12 +45,8 @@ def blocking_keys_stream(
     hashed static index and re-attach real uids from a (rid, uid)
     dictionary after the C-threshold, exactly like ``fps.candidate_pairs``.
     """
-    udf = hlsh.hlsh_keys_udf(positions, n_bits)
-    uid_expr = (
-        F.xxhash64(F.col("uid")).alias("uid") if hash_uid else F.col("uid")
-    )
-    return encoded_stream.select(
-        uid_expr, F.posexplode(udf(F.col("bf"))).alias("group_id", "key")
+    return hlsh.blocking_keys(
+        encoded_stream, "uid", "bf", positions, n_bits, hash_uid=hash_uid
     )
 
 

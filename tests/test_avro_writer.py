@@ -2,7 +2,6 @@
 own clk_voters_a fixture through write_avro/read_avro, codec coverage,
 deterministic output, and the Spark per-partition part-file writer."""
 
-import os
 
 import pytest
 
@@ -20,7 +19,7 @@ MR_DATA = (
 FIXTURE = f"{MR_DATA}/clk_voters_a/avro/clk_voters_a.avro"
 
 
-@pytest.mark.skipif(not os.path.exists(FIXTURE), reason="reference tree not mounted")
+@pytest.mark.reference(FIXTURE)
 @pytest.mark.parametrize("codec", ["null", "deflate"])
 def test_roundtrip_reference_fixture(tmp_path, codec):
     schema, records = read_avro(FIXTURE)
@@ -31,7 +30,7 @@ def test_roundtrip_reference_fixture(tmp_path, codec):
     assert records2 == records  # fixed bytes + strings byte-equal
 
 
-@pytest.mark.skipif(not os.path.exists(FIXTURE), reason="reference tree not mounted")
+@pytest.mark.reference(FIXTURE)
 def test_write_is_deterministic(tmp_path):
     schema, records = read_avro(FIXTURE)
     p1, p2 = str(tmp_path / "a.avro"), str(tmp_path / "b.avro")

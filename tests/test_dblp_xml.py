@@ -31,7 +31,7 @@ def _read(path):
     return open(path, "rb").read().decode("iso-8859-1")
 
 
-@pytest.mark.skipif(not os.path.exists(REF_FIXTURE), reason="reference tree not mounted")
+@pytest.mark.reference(REF_FIXTURE)
 def test_reference_fixture_whole_file():
     recs = parse_range(_read(REF_FIXTURE), 0, os.path.getsize(REF_FIXTURE))
     assert len(recs) == 86
@@ -47,7 +47,7 @@ def test_reference_fixture_whole_file():
         assert r[3] == MISSING_VALUE or r[3].isdigit()
 
 
-@pytest.mark.skipif(not os.path.exists(REF_FIXTURE), reason="reference tree not mounted")
+@pytest.mark.reference(REF_FIXTURE)
 def test_reference_fixture_split_invariance():
     """DblpXmlInputFormatTest.test2/test3 intent, strengthened: contiguous
     splits must union to the whole-file read at EVERY sampled byte offset —

@@ -12,6 +12,7 @@ REF_CSV = "/root/reference/pprl-scaling-framework-lib/src/test/resources/data/pe
 REF_STATS = "/root/reference/pprl-scaling-framework-lib/src/test/resources/data/stats_1.properties"
 
 
+@pytest.mark.reference(REF_CSV)
 def test_csv_ingest_reference_fixture(spark):
     schema = T.StructType([
         T.StructField("id", T.StringType()),
@@ -50,6 +51,7 @@ def test_assign_uid_ordinal(spark):
     assert got == {"a": "a0", "m": "a1", "z": "a2"}
 
 
+@pytest.mark.reference(REF_STATS)
 def test_stats_properties_fixture_roundtrip():
     text = open(REF_STATS).read()
     parsed = ingest.properties_to_stats(text)
@@ -71,6 +73,7 @@ def test_stats_properties_fixture_roundtrip():
     assert back["fields"]["name"]["avg.unique.2grams.count"] == pytest.approx(7.01)
 
 
+@pytest.mark.reference(REF_CSV)
 def test_qgram_stats_match_reference_convention(spark):
     """avg q-gram counts computed by our A4 expr over the person_small rows
     reproduce QGramUtil semantics (cross-checked against core.qgrams)."""

@@ -29,9 +29,7 @@ REF = "/root/reference"
 MR_DATA = f"{REF}/pprl-scaling-framework-mapreduce/pprl-scaling-framework-mapreduce-blocking/src/test/resources/data"
 SVC_DATA = f"{REF}/pprl-scaling-framework-service/src/test/resources/data"
 
-pytestmark = pytest.mark.skipif(
-    not os.path.exists(MR_DATA), reason="reference fixtures unavailable"
-)
+pytestmark = pytest.mark.reference(MR_DATA)
 
 
 @pytest.mark.parametrize("party,limit", [("a", 20000), ("b", 5000)])

@@ -41,6 +41,9 @@ THETA = 128          # > max TM hamming (124) on this data
 DICE_T = 0.81        # best single-threshold operating point (sweep)
 ENTITY_RE = r"^[ab](\d+)"
 
+pytestmark = pytest.mark.reference(
+    *(f"{BASE}/clk_voters_{p}/avro/clk_voters_{p}.avro" for p in ("a", "b")))
+
 
 @pytest.fixture(scope="module")
 def voters(spark):
